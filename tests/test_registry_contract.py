@@ -4,13 +4,19 @@ The per-round driver verifies only the FIRST 50 ``queries()`` entries,
 so the registry ordering IS part of the correctness pipeline: these
 pins fail loudly if a future round adds queries without folding the
 newly certified keys into the front-load set, or registers a query
-without an oracle (outside the documented rows-only pair).
+without an oracle (outside the documented rows-only query).
 """
+
+import hashlib
+import inspect
+
+import pytest
 
 from tracker_trainer_spark.queries import (
     ORACLES,
     QUERIES,
     _DRIVER_CERTIFIED,
+    _assemble_registry,
 )
 
 DRIVER_WINDOW = 50
@@ -30,6 +36,18 @@ def test_every_query_has_an_oracle_or_is_documented_rows_only():
     stale = ROWS_ONLY - set(QUERIES)
     assert not stale, stale
     assert not set(ORACLES) - set(QUERIES)  # no orphan oracle SQL
+
+
+def test_every_oracle_has_a_query():
+    assert set(ORACLES) <= set(QUERIES), set(ORACLES) - set(QUERIES)
+
+
+def test_queries_without_oracle_are_the_declared_exceptions():
+    # non-SQL-expressible ops only — anything else missing an oracle is
+    # a silent hole in the correctness gate
+    assert set(QUERIES) - set(ORACLES) == {
+        "train_e2e_metrics",      # model fits + inference
+    }
 
 
 def test_certified_keys_all_exist():
@@ -54,3 +72,40 @@ def test_uncertified_queries_front_load_into_the_driver_window():
     # queries don't fill it
     if len(uncertified) >= DRIVER_WINDOW:
         assert all(k not in _DRIVER_CERTIFIED for k in window)
+
+
+# sha256 over every (name, oracle SQL) pair in driver order: pins the
+# registry's names, order and oracle strings in one value.
+REGISTRY_DIGEST = (
+    "4e62ea6e4b30b687733b2bce5a39c72477f17a5dbe6a0420db754b61584bdff5")
+
+
+def test_registry_names_order_and_oracles_are_pinned():
+    h = hashlib.sha256()
+    for name in QUERIES:
+        h.update((name + "\t" + (ORACLES.get(name) or "")).encode() + b"\0")
+    assert h.hexdigest() == REGISTRY_DIGEST, (
+        "registry names, order or oracle SQL changed; if a query was "
+        f"deliberately added, set REGISTRY_DIGEST = {h.hexdigest()!r}")
+
+
+def test_assembly_rejects_a_name_registered_twice():
+    def fn(spark, sf_dir):
+        return None
+
+    with pytest.raises(ValueError, match="q_dup"):
+        _assemble_registry((("q_dup", fn, "SELECT 1"),),
+                           (("q_dup", fn, None),))
+
+
+def test_query_callables_take_spark_and_sfdir():
+    for name, fn in QUERIES.items():
+        params = list(inspect.signature(fn).parameters)
+        assert params[:2] == ["spark", "sf_dir"], (name, params)
+
+
+def test_entry_module_exposes_full_registry():
+    import __spark_entry__ as e
+
+    assert set(e.queries()) == set(QUERIES)
+    assert e.oracle_sql() == ORACLES

@@ -2324,91 +2324,44 @@ FROM iv ORDER BY user_id, version
 """
 
 
-# Registered via the DEFERRED channel in queries.py: these append AFTER
-# the driver-window reorder, so they cannot displace an older
-# not-yet-verified query from the verification window.  Empty right now
-# (r4's certified-set refresh opened window slots, so value_drift_ks was
-# promoted into the main registry); use it again for any mid-round
-# addition once the 50-query window refills.
-ANALYTICS_DEFERRED_QUERIES = {}
-
-ANALYTICS_DEFERRED_ORACLES = {}
-
-
-ANALYTICS_QUERIES = {
-    "doc_bigram_pmi": doc_bigram_pmi,
-    "doc_zipf_fit": doc_zipf_fit,
-    "part_name_editdist_pairs": part_name_editdist_pairs,
-    "events_daily_pivot": events_daily_pivot,
-    "purchase_moving_avg": purchase_moving_avg,
-    "lineitem_stats_profile": lineitem_stats_profile,
-    "doc_tfidf_top_terms": doc_tfidf_top_terms,
-    "cube_orders_margin": cube_orders_margin,
-    "events_json_value_stats": events_json_value_stats,
-    "orders_profile": orders_profile,
-    "customer_spend_quartiles": customer_spend_quartiles,
-    "dedup_incremental_batch": dedup_incremental_batch,
-    "stratified_sample_by_lang": stratified_sample_by_lang,
-    "purchase_daily_gapfill": purchase_daily_gapfill,
-    "value_drift_psi": value_drift_psi,
-    "weighted_doc_sample": weighted_doc_sample,
-    "user_decayed_value": user_decayed_value,
-    "customer_pareto_frontier": customer_pareto_frontier,
-    "doc_bm25_search": doc_bm25_search,
-    "lineitem_measures_unpivot": lineitem_measures_unpivot,
-    "sliding_event_counts": sliding_event_counts,
-    "value_drift_ks": value_drift_ks,
-    "oof_target_encoding": oof_target_encoding,
-    "fk_integrity_audit": fk_integrity_audit,
-    "conversion_latency_quantiles": conversion_latency_quantiles,
-    "event_burst_dedup": event_burst_dedup,
-    "feature_quantile_bins": feature_quantile_bins,
-    "bpe_first_merges": bpe_first_merges,
-    "embedding_isotropy": embedding_isotropy,
-    "doc_pii_scan": doc_pii_scan,
-    "feature_robust_scaling": feature_robust_scaling,
-    "score_calibration_curve": score_calibration_curve,
-    "user_tier_scd2": user_tier_scd2,
-    # rows-only by design (binary media): no oracle entry
-    "media_image_features": media_image_features,
-}
-
-ANALYTICS_ORACLES = {
-    "doc_bigram_pmi": BIGRAM_PMI_SQL,
-    "doc_zipf_fit": ZIPF_SQL,
-    "part_name_editdist_pairs": EDITDIST_SQL,
-    "events_daily_pivot": EVENTS_DAILY_PIVOT_SQL,
-    "purchase_moving_avg": PURCHASE_MOVING_AVG_SQL,
-    "lineitem_stats_profile": LINEITEM_STATS_SQL,
-    "doc_tfidf_top_terms": DOC_TFIDF_SQL,
-    "cube_orders_margin": CUBE_ORDERS_SQL,
-    "events_json_value_stats": EVENTS_JSON_SQL,
-    "orders_profile": ORDERS_PROFILE_SQL,
-    "customer_spend_quartiles": CUSTOMER_QUARTILES_SQL,
-    "dedup_incremental_batch": DEDUP_INCREMENTAL_SQL,
-    "stratified_sample_by_lang": STRATIFIED_SAMPLE_SQL,
-    "purchase_daily_gapfill": PURCHASE_GAPFILL_SQL,
-    "value_drift_psi": VALUE_DRIFT_PSI_SQL,
-    "weighted_doc_sample": WEIGHTED_SAMPLE_SQL,
-    "user_decayed_value": USER_DECAYED_SQL,
-    "customer_pareto_frontier": PARETO_SQL,
-    "doc_bm25_search": BM25_SQL,
-    "lineitem_measures_unpivot": UNPIVOT_SQL,
-    "sliding_event_counts": SLIDING_COUNTS_SQL,
-    "value_drift_ks": VALUE_KS_SQL,
-    "oof_target_encoding": OOF_TARGET_SQL,
-    # r7: the portable stub decode made the multimodal plumbing
-    # value-verifiable — no parquet input, the oracle regenerates the
-    # synthetic pixels in SQL
-    "media_image_features": MEDIA_FEATURES_SQL,
-    "fk_integrity_audit": FK_AUDIT_SQL,
-    "conversion_latency_quantiles": CONVERSION_LATENCY_SQL,
-    "event_burst_dedup": BURST_DEDUP_SQL,
-    "feature_quantile_bins": FEATURE_BINS_SQL,
-    "bpe_first_merges": BPE_MERGES_SQL,
-    "embedding_isotropy": ISOTROPY_SQL,
-    "doc_pii_scan": PII_SCAN_SQL,
-    "feature_robust_scaling": ROBUST_SCALING_SQL,
-    "score_calibration_curve": CALIBRATION_SQL,
-    "user_tier_scd2": SCD2_SQL,
-}
+# (name, query, DuckDB oracle SQL) rows; queries.py assembles the registry.
+REGISTRY = (
+    ("doc_bigram_pmi", doc_bigram_pmi, BIGRAM_PMI_SQL),
+    ("doc_zipf_fit", doc_zipf_fit, ZIPF_SQL),
+    ("part_name_editdist_pairs", part_name_editdist_pairs, EDITDIST_SQL),
+    ("events_daily_pivot", events_daily_pivot, EVENTS_DAILY_PIVOT_SQL),
+    ("purchase_moving_avg", purchase_moving_avg, PURCHASE_MOVING_AVG_SQL),
+    ("lineitem_stats_profile", lineitem_stats_profile, LINEITEM_STATS_SQL),
+    ("doc_tfidf_top_terms", doc_tfidf_top_terms, DOC_TFIDF_SQL),
+    ("cube_orders_margin", cube_orders_margin, CUBE_ORDERS_SQL),
+    ("events_json_value_stats", events_json_value_stats, EVENTS_JSON_SQL),
+    ("orders_profile", orders_profile, ORDERS_PROFILE_SQL),
+    ("customer_spend_quartiles",
+     customer_spend_quartiles, CUSTOMER_QUARTILES_SQL),
+    ("dedup_incremental_batch",
+     dedup_incremental_batch, DEDUP_INCREMENTAL_SQL),
+    ("stratified_sample_by_lang",
+     stratified_sample_by_lang, STRATIFIED_SAMPLE_SQL),
+    ("purchase_daily_gapfill", purchase_daily_gapfill, PURCHASE_GAPFILL_SQL),
+    ("value_drift_psi", value_drift_psi, VALUE_DRIFT_PSI_SQL),
+    ("weighted_doc_sample", weighted_doc_sample, WEIGHTED_SAMPLE_SQL),
+    ("user_decayed_value", user_decayed_value, USER_DECAYED_SQL),
+    ("customer_pareto_frontier", customer_pareto_frontier, PARETO_SQL),
+    ("doc_bm25_search", doc_bm25_search, BM25_SQL),
+    ("lineitem_measures_unpivot", lineitem_measures_unpivot, UNPIVOT_SQL),
+    ("sliding_event_counts", sliding_event_counts, SLIDING_COUNTS_SQL),
+    ("value_drift_ks", value_drift_ks, VALUE_KS_SQL),
+    ("oof_target_encoding", oof_target_encoding, OOF_TARGET_SQL),
+    ("fk_integrity_audit", fk_integrity_audit, FK_AUDIT_SQL),
+    ("conversion_latency_quantiles",
+     conversion_latency_quantiles, CONVERSION_LATENCY_SQL),
+    ("event_burst_dedup", event_burst_dedup, BURST_DEDUP_SQL),
+    ("feature_quantile_bins", feature_quantile_bins, FEATURE_BINS_SQL),
+    ("bpe_first_merges", bpe_first_merges, BPE_MERGES_SQL),
+    ("embedding_isotropy", embedding_isotropy, ISOTROPY_SQL),
+    ("doc_pii_scan", doc_pii_scan, PII_SCAN_SQL),
+    ("feature_robust_scaling", feature_robust_scaling, ROBUST_SCALING_SQL),
+    ("score_calibration_curve", score_calibration_curve, CALIBRATION_SQL),
+    ("user_tier_scd2", user_tier_scd2, SCD2_SQL),
+    ("media_image_features", media_image_features, MEDIA_FEATURES_SQL),
+)

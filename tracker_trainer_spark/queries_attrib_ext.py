@@ -1,4 +1,4 @@
-"""Marketing attribution / engine-operations queries (deferred channel).
+"""Marketing attribution / engine-operations queries.
 
 - ``multitouch_attribution`` — multi-touch credit assignment: every
   purchase distributes credit over the same user's touchpoints in the
@@ -450,16 +450,10 @@ ORDER BY day
 """
 
 
-ATTRIB_DEFERRED_QUERIES = {
-    "multitouch_attribution": multitouch_attribution,
-    "key_skew_audit": key_skew_audit,
-    "zone_map_pruning_audit": zone_map_pruning_audit,
-    "partition_freshness_audit": partition_freshness_audit,
-}
-
-ATTRIB_DEFERRED_ORACLES = {
-    "multitouch_attribution": MTA_SQL,
-    "key_skew_audit": _skew_sql(),
-    "zone_map_pruning_audit": _zone_sql(),
-    "partition_freshness_audit": FRESHNESS_SQL,
-}
+# (name, query, DuckDB oracle SQL) rows; queries.py assembles the registry.
+REGISTRY = (
+    ("multitouch_attribution", multitouch_attribution, MTA_SQL),
+    ("key_skew_audit", key_skew_audit, _skew_sql()),
+    ("zone_map_pruning_audit", zone_map_pruning_audit, _zone_sql()),
+    ("partition_freshness_audit", partition_freshness_audit, FRESHNESS_SQL),
+)

@@ -1,4 +1,4 @@
-"""Experimentation / forecast-evaluation queries (deferred channel).
+"""Experimentation / forecast-evaluation queries.
 
 - ``ab_test_lift`` — the experimentation-platform readout: users split
   into two variants by the repo's engine-portable md5 hash bucket
@@ -348,14 +348,9 @@ FROM z
 """
 
 
-EXP_DEFERRED_QUERIES = {
-    "ab_test_lift": ab_test_lift,
-    "holt_backtest": holt_backtest,
-    "mann_whitney_u": mann_whitney_u,
-}
-
-EXP_DEFERRED_ORACLES = {
-    "ab_test_lift": AB_SQL,
-    "holt_backtest": _backtest_sql(),
-    "mann_whitney_u": MWU_SQL,
-}
+# (name, query, DuckDB oracle SQL) rows; queries.py assembles the registry.
+REGISTRY = (
+    ("ab_test_lift", ab_test_lift, AB_SQL),
+    ("holt_backtest", holt_backtest, _backtest_sql()),
+    ("mann_whitney_u", mann_whitney_u, MWU_SQL),
+)

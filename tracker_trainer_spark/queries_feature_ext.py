@@ -1,4 +1,4 @@
-"""Feature-store / data-quality query families (deferred channel).
+"""Feature-store / data-quality query families.
 
 Four operator classes the registry did not yet certify:
 
@@ -539,20 +539,12 @@ ORDER BY lang
 """
 
 
-FEATURE_DEFERRED_QUERIES = {
-    "feature_pit_join": feature_pit_join,
-    "weekday_seasonality": weekday_seasonality,
-    "k_anonymity_audit": k_anonymity_audit,
-    "stream_session_stats": stream_session_stats,
-    "l_diversity_audit": l_diversity_audit,
-    "corpus_mixture_weights": corpus_mixture_weights,
-}
-
-FEATURE_DEFERRED_ORACLES = {
-    "feature_pit_join": PIT_SQL,
-    "weekday_seasonality": SEASONALITY_SQL,
-    "k_anonymity_audit": KANON_SQL,
-    "stream_session_stats": STREAM_SESSION_SQL,
-    "l_diversity_audit": LDIV_SQL,
-    "corpus_mixture_weights": MIXTURE_SQL,
-}
+# (name, query, DuckDB oracle SQL) rows; queries.py assembles the registry.
+REGISTRY = (
+    ("feature_pit_join", feature_pit_join, PIT_SQL),
+    ("weekday_seasonality", weekday_seasonality, SEASONALITY_SQL),
+    ("k_anonymity_audit", k_anonymity_audit, KANON_SQL),
+    ("stream_session_stats", stream_session_stats, STREAM_SESSION_SQL),
+    ("l_diversity_audit", l_diversity_audit, LDIV_SQL),
+    ("corpus_mixture_weights", corpus_mixture_weights, MIXTURE_SQL),
+)

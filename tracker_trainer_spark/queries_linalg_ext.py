@@ -1,4 +1,4 @@
-"""Iterative linear algebra / CEP pattern queries (deferred channel).
+"""Iterative linear algebra / CEP pattern queries.
 
 - ``embedding_top_pc`` — the leading principal component of the
   embedding corpus by IN-ENGINE power iteration: center, build the
@@ -275,12 +275,8 @@ ORDER BY user_id
 """
 
 
-LINALG_DEFERRED_QUERIES = {
-    "embedding_top_pc": embedding_top_pc,
-    "event_pattern_match": event_pattern_match,
-}
-
-LINALG_DEFERRED_ORACLES = {
-    "embedding_top_pc": _pc_sql(),
-    "event_pattern_match": PATTERN_SQL,
-}
+# (name, query, DuckDB oracle SQL) rows; queries.py assembles the registry.
+REGISTRY = (
+    ("embedding_top_pc", embedding_top_pc, _pc_sql()),
+    ("event_pattern_match", event_pattern_match, PATTERN_SQL),
+)

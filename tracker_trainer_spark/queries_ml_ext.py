@@ -3020,71 +3020,39 @@ SELECT (SELECT count(*) FROM sel) AS n_decisions,
 """
 
 
-ML_QUERIES = {
-    "decision_training_rows": decision_training_rows,
-    "duplicate_cluster_histogram": duplicate_cluster_histogram,
-    "propensity_training_weights": propensity_training_weights,
-    "ksuid_decode_partition": ksuid_decode_partition,
-    "groom_fixpoint_check": groom_fixpoint_check,
-    "groom_concurrent_ingest": groom_concurrent_ingest,
-    "ann_pq_topk": ann_pq_topk,
-    "customer_mahalanobis_outliers": customer_mahalanobis_outliers,
-    "ann_ivfpq_topk": ann_ivfpq_topk,
-    "kmeans_embedding_clusters": kmeans_embedding_clusters,
-    "jaccard_prefix_join": jaccard_prefix_join,
-    "doc_unigram_logprob": doc_unigram_logprob,
-    "retention_cohorts": retention_cohorts,
-    "event_transition_matrix": event_transition_matrix,
-    "daily_anomaly_zscore": daily_anomaly_zscore,
-    "user_activity_streaks": user_activity_streaks,
-    "basket_pair_lift": basket_pair_lift,
-    "doc_pack_assignments": doc_pack_assignments,
-    "corpus_decontamination": corpus_decontamination,
-    "customer_order_sequences": customer_order_sequences,
-    "ipw_weight_diagnostics": ipw_weight_diagnostics,
-    "customer_retention_setops": customer_retention_setops,
-    "weighted_median_price": weighted_median_price,
-    "price_quantity_regression": price_quantity_regression,
-    "supplier_triangle_count": supplier_triangle_count,
-    # appended LAST on purpose: the driver certifies the first 50
-    # queries()' entries per round; these three wait for the next
-    # window rather than pushing an older uncertified query out of it
-    "lineitem_benford_deviation": lineitem_benford_deviation,
-    "user_event_entropy": user_event_entropy,
-    "customer_rfm_segments": customer_rfm_segments,
-    "nation_spend_gini": nation_spend_gini,
-    "order_priority_chi2": order_priority_chi2,
-}
-
-ML_ORACLES = {
-    "decision_training_rows": DECISION_ROWS_SQL,
-    "duplicate_cluster_histogram": DUP_HISTOGRAM_SQL,
-    "propensity_training_weights": PROPENSITY_WEIGHTS_SQL,
-    "ksuid_decode_partition": KSUID_DECODE_SQL,
-    "groom_fixpoint_check": GROOM_FIXPOINT_SQL,
-    "groom_concurrent_ingest": GROOM_CONCURRENT_SQL,
-    "ann_pq_topk": ANN_PQ_SQL,
-    "customer_mahalanobis_outliers": MAHALANOBIS_SQL,
-    "ann_ivfpq_topk": ANN_IVFPQ_SQL,
-    "kmeans_embedding_clusters": KMEANS_SQL,
-    "jaccard_prefix_join": JACCARD_PREFIX_SQL,
-    "doc_unigram_logprob": UNIGRAM_LOGPROB_SQL,
-    "retention_cohorts": RETENTION_SQL,
-    "event_transition_matrix": TRANSITION_SQL,
-    "daily_anomaly_zscore": ANOMALY_SQL,
-    "user_activity_streaks": STREAKS_SQL,
-    "basket_pair_lift": BASKET_LIFT_SQL,
-    "doc_pack_assignments": PACK_SQL,
-    "corpus_decontamination": DECONTAMINATION_SQL,
-    "customer_order_sequences": ORDER_SEQ_SQL,
-    "ipw_weight_diagnostics": IPW_DIAG_SQL,
-    "customer_retention_setops": SETOPS_SQL,
-    "weighted_median_price": WEIGHTED_MEDIAN_SQL,
-    "price_quantity_regression": REGRESSION_SQL,
-    "supplier_triangle_count": TRIANGLE_SQL,
-    "lineitem_benford_deviation": BENFORD_SQL,
-    "user_event_entropy": EVENT_ENTROPY_SQL,
-    "customer_rfm_segments": RFM_SQL,
-    "nation_spend_gini": GINI_SQL,
-    "order_priority_chi2": CHI2_SQL,
-}
+# (name, query, DuckDB oracle SQL) rows; queries.py assembles the registry.
+REGISTRY = (
+    ("decision_training_rows", decision_training_rows, DECISION_ROWS_SQL),
+    ("duplicate_cluster_histogram",
+     duplicate_cluster_histogram, DUP_HISTOGRAM_SQL),
+    ("propensity_training_weights",
+     propensity_training_weights, PROPENSITY_WEIGHTS_SQL),
+    ("ksuid_decode_partition", ksuid_decode_partition, KSUID_DECODE_SQL),
+    ("groom_fixpoint_check", groom_fixpoint_check, GROOM_FIXPOINT_SQL),
+    ("groom_concurrent_ingest", groom_concurrent_ingest, GROOM_CONCURRENT_SQL),
+    ("ann_pq_topk", ann_pq_topk, ANN_PQ_SQL),
+    ("customer_mahalanobis_outliers",
+     customer_mahalanobis_outliers, MAHALANOBIS_SQL),
+    ("ann_ivfpq_topk", ann_ivfpq_topk, ANN_IVFPQ_SQL),
+    ("kmeans_embedding_clusters", kmeans_embedding_clusters, KMEANS_SQL),
+    ("jaccard_prefix_join", jaccard_prefix_join, JACCARD_PREFIX_SQL),
+    ("doc_unigram_logprob", doc_unigram_logprob, UNIGRAM_LOGPROB_SQL),
+    ("retention_cohorts", retention_cohorts, RETENTION_SQL),
+    ("event_transition_matrix", event_transition_matrix, TRANSITION_SQL),
+    ("daily_anomaly_zscore", daily_anomaly_zscore, ANOMALY_SQL),
+    ("user_activity_streaks", user_activity_streaks, STREAKS_SQL),
+    ("basket_pair_lift", basket_pair_lift, BASKET_LIFT_SQL),
+    ("doc_pack_assignments", doc_pack_assignments, PACK_SQL),
+    ("corpus_decontamination", corpus_decontamination, DECONTAMINATION_SQL),
+    ("customer_order_sequences", customer_order_sequences, ORDER_SEQ_SQL),
+    ("ipw_weight_diagnostics", ipw_weight_diagnostics, IPW_DIAG_SQL),
+    ("customer_retention_setops", customer_retention_setops, SETOPS_SQL),
+    ("weighted_median_price", weighted_median_price, WEIGHTED_MEDIAN_SQL),
+    ("price_quantity_regression", price_quantity_regression, REGRESSION_SQL),
+    ("supplier_triangle_count", supplier_triangle_count, TRIANGLE_SQL),
+    ("lineitem_benford_deviation", lineitem_benford_deviation, BENFORD_SQL),
+    ("user_event_entropy", user_event_entropy, EVENT_ENTROPY_SQL),
+    ("customer_rfm_segments", customer_rfm_segments, RFM_SQL),
+    ("nation_spend_gini", nation_spend_gini, GINI_SQL),
+    ("order_priority_chi2", order_priority_chi2, CHI2_SQL),
+)

@@ -1,4 +1,4 @@
-"""Recommender / growth-analytics queries (deferred channel).
+"""Recommender / growth-analytics queries.
 
 - ``part_affinity_recs`` — item-item collaborative filtering: top
   recommendations per seed part by co-purchase cosine
@@ -324,12 +324,8 @@ ORDER BY c.cohort, c.age_weeks
 """
 
 
-RECS_DEFERRED_QUERIES = {
-    "part_affinity_recs": part_affinity_recs,
-    "cohort_ltv_curve": cohort_ltv_curve,
-}
-
-RECS_DEFERRED_ORACLES = {
-    "part_affinity_recs": RECS_SQL,
-    "cohort_ltv_curve": LTV_SQL,
-}
+# (name, query, DuckDB oracle SQL) rows; queries.py assembles the registry.
+REGISTRY = (
+    ("part_affinity_recs", part_affinity_recs, RECS_SQL),
+    ("cohort_ltv_curve", cohort_ltv_curve, LTV_SQL),
+)

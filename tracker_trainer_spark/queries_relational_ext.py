@@ -439,20 +439,12 @@ ORDER BY s_name
 """
 
 
-EXT_QUERIES = {
-    "q2_min_cost_supplier": q2_min_cost_supplier,
-    "q8_market_share": q8_market_share,
-    "q9_product_profit": q9_product_profit,
-    "q11_important_parts": q11_important_parts,
-    "q16_supplier_counts": q16_supplier_counts,
-    "q20_promotion_suppliers": q20_promotion_suppliers,
-}
-
-EXT_ORACLES = {
-    "q2_min_cost_supplier": Q2_SQL,
-    "q8_market_share": Q8_SQL,
-    "q9_product_profit": Q9_SQL,
-    "q11_important_parts": Q11_SQL,
-    "q16_supplier_counts": Q16_SQL,
-    "q20_promotion_suppliers": Q20_SQL,
-}
+# (name, query, DuckDB oracle SQL) rows; queries.py assembles the registry.
+REGISTRY = (
+    ("q2_min_cost_supplier", q2_min_cost_supplier, Q2_SQL),
+    ("q8_market_share", q8_market_share, Q8_SQL),
+    ("q9_product_profit", q9_product_profit, Q9_SQL),
+    ("q11_important_parts", q11_important_parts, Q11_SQL),
+    ("q16_supplier_counts", q16_supplier_counts, Q16_SQL),
+    ("q20_promotion_suppliers", q20_promotion_suppliers, Q20_SQL),
+)

@@ -1,5 +1,4 @@
-"""Forecasting / CDC / weighted-traversal / LM-scoring queries
-(deferred channel).
+"""Forecasting / CDC / weighted-traversal / LM-scoring queries.
 
 Four more operator classes for the registry:
 
@@ -547,18 +546,11 @@ ORDER BY doc_id
 """
 
 
-SEQ_DEFERRED_QUERIES = {
-    "holt_linear_forecast": holt_linear_forecast,
-    "user_state_cdc_merge": user_state_cdc_merge,
-    "supplier_cheapest_paths": supplier_cheapest_paths,
-    "doc_bigram_perplexity": doc_bigram_perplexity,
-    "tokenizer_oov_rate": tokenizer_oov_rate,
-}
-
-SEQ_DEFERRED_ORACLES = {
-    "holt_linear_forecast": HOLT_SQL,
-    "user_state_cdc_merge": CDC_SQL,
-    "supplier_cheapest_paths": _sssp_sql(),
-    "doc_bigram_perplexity": BIGRAM_PPL_SQL,
-    "tokenizer_oov_rate": OOV_SQL,
-}
+# (name, query, DuckDB oracle SQL) rows; queries.py assembles the registry.
+REGISTRY = (
+    ("holt_linear_forecast", holt_linear_forecast, HOLT_SQL),
+    ("user_state_cdc_merge", user_state_cdc_merge, CDC_SQL),
+    ("supplier_cheapest_paths", supplier_cheapest_paths, _sssp_sql()),
+    ("doc_bigram_perplexity", doc_bigram_perplexity, BIGRAM_PPL_SQL),
+    ("tokenizer_oov_rate", tokenizer_oov_rate, OOV_SQL),
+)

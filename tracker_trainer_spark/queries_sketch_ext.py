@@ -1804,42 +1804,23 @@ FROM exact, est, nt
 """
 
 
-SKETCH_QUERIES = {
-    "merged_quantile_audit": merged_quantile_audit,
-    "stream_reward_join": stream_reward_join,
-    "hll_distinct_users": hll_distinct_users,
-    "hll_merge_daily": hll_merge_daily,
-    "countmin_frequency_topk": countmin_frequency_topk,
-    "bloom_filter_audit": bloom_filter_audit,
-    "customer_hierarchy_rollup": customer_hierarchy_rollup,
-    "stream_distinct_users": stream_distinct_users,
-    "user_running_distinct": user_running_distinct,
-    "theil_sen_price_slope": theil_sen_price_slope,
-    "supplier_shared_parts": supplier_shared_parts,
-    "cms_join_size_estimate": cms_join_size_estimate,
-    "daily_revenue_autocorr": daily_revenue_autocorr,
-    "event_trigram_patterns": event_trigram_patterns,
-    "isotonic_calibration": isotonic_calibration,
-    "bootstrap_mean_ci": bootstrap_mean_ci,
-    "km_conversion_survival": km_conversion_survival,
-}
-
-SKETCH_ORACLES = {
-    "merged_quantile_audit": MERGED_QUANTILE_SQL,
-    "stream_reward_join": STREAM_REWARD_JOIN_SQL,
-    "hll_distinct_users": HLL_SQL,
-    "hll_merge_daily": HLL_MERGE_SQL,
-    "countmin_frequency_topk": CMS_SQL,
-    "bloom_filter_audit": BLOOM_SQL,
-    "customer_hierarchy_rollup": HIERARCHY_SQL,
-    "stream_distinct_users": STREAM_DISTINCT_SQL,
-    "user_running_distinct": RUNNING_DISTINCT_SQL,
-    "theil_sen_price_slope": THEIL_SEN_SQL,
-    "supplier_shared_parts": SHARED_PARTS_SQL,
-    "cms_join_size_estimate": CMS_JOIN_SIZE_SQL,
-    "daily_revenue_autocorr": AUTOCORR_SQL,
-    "event_trigram_patterns": TRIGRAM_SQL,
-    "isotonic_calibration": ISOTONIC_SQL,
-    "bootstrap_mean_ci": BOOTSTRAP_SQL,
-    "km_conversion_survival": KM_SQL,
-}
+# (name, query, DuckDB oracle SQL) rows; queries.py assembles the registry.
+REGISTRY = (
+    ("merged_quantile_audit", merged_quantile_audit, MERGED_QUANTILE_SQL),
+    ("stream_reward_join", stream_reward_join, STREAM_REWARD_JOIN_SQL),
+    ("hll_distinct_users", hll_distinct_users, HLL_SQL),
+    ("hll_merge_daily", hll_merge_daily, HLL_MERGE_SQL),
+    ("countmin_frequency_topk", countmin_frequency_topk, CMS_SQL),
+    ("bloom_filter_audit", bloom_filter_audit, BLOOM_SQL),
+    ("customer_hierarchy_rollup", customer_hierarchy_rollup, HIERARCHY_SQL),
+    ("stream_distinct_users", stream_distinct_users, STREAM_DISTINCT_SQL),
+    ("user_running_distinct", user_running_distinct, RUNNING_DISTINCT_SQL),
+    ("theil_sen_price_slope", theil_sen_price_slope, THEIL_SEN_SQL),
+    ("supplier_shared_parts", supplier_shared_parts, SHARED_PARTS_SQL),
+    ("cms_join_size_estimate", cms_join_size_estimate, CMS_JOIN_SIZE_SQL),
+    ("daily_revenue_autocorr", daily_revenue_autocorr, AUTOCORR_SQL),
+    ("event_trigram_patterns", event_trigram_patterns, TRIGRAM_SQL),
+    ("isotonic_calibration", isotonic_calibration, ISOTONIC_SQL),
+    ("bootstrap_mean_ci", bootstrap_mean_ci, BOOTSTRAP_SQL),
+    ("km_conversion_survival", km_conversion_survival, KM_SQL),
+)

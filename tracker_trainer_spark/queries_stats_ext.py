@@ -1,4 +1,4 @@
-"""Sequential-statistics and graph-traversal queries (deferred channel).
+"""Sequential-statistics and graph-traversal queries.
 
 Families added here, each a distinct operator class the registry did not
 yet certify:
@@ -863,22 +863,13 @@ FROM m
 """
 
 
-STATS_DEFERRED_QUERIES = {
-    "daily_value_ewma": daily_value_ewma,
-    "revenue_cusum_shift": revenue_cusum_shift,
-    "variant_ucb_ranking": variant_ucb_ranking,
-    "ridge_price_fit": ridge_price_fit,
-    "frequent_brand_triples": frequent_brand_triples,
-    "supplier_cosupply_bfs": supplier_cosupply_bfs,
-    "spearman_price_corr": spearman_price_corr,
-}
-
-STATS_DEFERRED_ORACLES = {
-    "daily_value_ewma": EWMA_SQL,
-    "revenue_cusum_shift": CUSUM_SQL,
-    "variant_ucb_ranking": UCB_SQL,
-    "ridge_price_fit": RIDGE_SQL,
-    "frequent_brand_triples": TRIPLES_SQL,
-    "supplier_cosupply_bfs": BFS_SQL,
-    "spearman_price_corr": SPEARMAN_SQL,
-}
+# (name, query, DuckDB oracle SQL) rows; queries.py assembles the registry.
+REGISTRY = (
+    ("daily_value_ewma", daily_value_ewma, EWMA_SQL),
+    ("revenue_cusum_shift", revenue_cusum_shift, CUSUM_SQL),
+    ("variant_ucb_ranking", variant_ucb_ranking, UCB_SQL),
+    ("ridge_price_fit", ridge_price_fit, RIDGE_SQL),
+    ("frequent_brand_triples", frequent_brand_triples, TRIPLES_SQL),
+    ("supplier_cosupply_bfs", supplier_cosupply_bfs, BFS_SQL),
+    ("spearman_price_corr", spearman_price_corr, SPEARMAN_SQL),
+)
